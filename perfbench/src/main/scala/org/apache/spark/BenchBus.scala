@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every posted event, so the
+  * benchmark's counters are complete when it reads them. The bus is
+  * package-private to Spark, hence this file's package. */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
