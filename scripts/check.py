@@ -4,7 +4,9 @@
 Runs each oracle SQL from Verify's oracle_sql.json in DuckDB over the same
 parquet tables, then compares against the engine's parquet output:
 columns sorted by name, rows sorted, exact value equality (bit-exact for
-floats — that is what a hash compare implies).
+floats — that is what a hash compare implies). A checked query that
+Verify's verify_report.json lists under zero_rows fails: an empty output
+passes any compare vacuously. A missing report is a failure too.
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [query ...]
 """
@@ -47,8 +49,18 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    try:
+        zero_rows = set(json.load(open(f"{out_dir}/verify_report.json"))["zero_rows"])
+    except (OSError, ValueError, KeyError) as e:
+        print(f"FAIL verify_report.json: {e}")
+        n_fail += 1
+        zero_rows = set()
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
+            continue
+        if name in zero_rows:
+            print(f"FAIL {name}: zero rows")
+            n_fail += 1
             continue
         try:
             exp = norm(con.execute(sql).fetchdf())
@@ -89,6 +101,7 @@ def main():
         else:
             print(f"PASS {name} ({len(exp)} rows)")
             n_pass += 1
+    print(f"zero_rows: {sorted(zero_rows)}")
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 

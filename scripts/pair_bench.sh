@@ -56,14 +56,11 @@ print(round(time.perf_counter()-t0, 3))"; }
 SPIN_START=$(cpu_spin)
 
 echo "[pair] engine bench on $SF ..." >&2
-# The engine leg's full per-query map lands in THIS window's artifact —
-# a pairing run must not also overwrite the rounds/BENCH_full_latest
-# record snapshot as a side effect (r15: two degraded pair windows
-# clobbered the snapshot that way; record cuts are deliberate
-# SPARK_GRAFT_RECORD=1 graft.Bench runs, not pairing by-products)
-ENGINE_JSON=$(SPARK_GRAFT_SF_DIR="$SF" \
-  SPARK_GRAFT_BENCH_OUT=$(mktemp /tmp/pair_engine.XXXX.json) \
-  scripts/run_verify.sh x x graft.Bench 2>/dev/null | tail -1)
+# graft.Bench writes its full artifact (with pass_times and noisy, which
+# the compact stdout line omits) only to SPARK_GRAFT_BENCH_OUT
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_OUT="$ORACLE_DIR/engine.json" \
+  scripts/run_verify.sh x x graft.Bench >/dev/null 2>&1
+ENGINE_JSON=$(cat "$ORACLE_DIR/engine.json")
 
 echo "[pair] duckdb comparator (same window) ..." >&2
 NAMES=$(python3 -c "import json,sys; print(' '.join(sorted(json.loads(sys.argv[1])['queries'])))" "$ENGINE_JSON")

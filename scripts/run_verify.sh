@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run graft.Verify directly against compiled classes (faster than sbt).
+# The classes are those of the checkout this script sits in.
 # Usage: scripts/run_verify.sh [sfDir] [outDir] [mainClass]
 set -e
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 MAIN=${3:-graft.Verify}
@@ -13,5 +15,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   "$MAIN" "$SF" "$OUT" "${@:4}"

@@ -1,6 +1,8 @@
 package graft
 
+import graft.core.Env
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Per-query timing includes plan + execution (count action);
@@ -9,19 +11,35 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The bench session config, shared with [[BenchScale]] so sf0.1 and
-    * scaled-up numbers are measured under identical settings. */
+  /** Local cores for every engine session: SPARK_GRAFT_CPUS, default all
+    * the JVM sees. */
+  def cpus(env: collection.Map[String, String] = sys.env): Int =
+    Env.int(env, "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors, min = 1)
+
+  /** Shuffle partitions: SPARK_GRAFT_SHUFFLE, default one per core. Large-SF
+    * runs raise it — at 1000× base a fixed 32 means ~19 M-row partitions
+    * that spill; sizing partitions to the data (AQE coalesces the small
+    * ones back) is the same knob a cluster run turns, measured in PERF.md's
+    * 1000× relational probe. */
+  private[graft] def shufflePartitions(env: collection.Map[String, String],
+                                       cpus: Int): Int =
+    Env.int(env, "SPARK_GRAFT_SHUFFLE", cpus, min = 1)
+
+  /** Measured passes: SPARK_GRAFT_PASSES, default 2 (the methodology every
+    * round since r1), recorded in the output so an artifact measured at a
+    * different N is never silently compared. */
+  private[graft] def passes(env: collection.Map[String, String]): Int =
+    Env.int(env, "SPARK_GRAFT_PASSES", 2, min = 1)
+
+  /** The one engine session config: Bench, BenchOne, Verify, Explain,
+    * ScaleUp and perfbench all build through it, so the oracle checks the
+    * plans the bench times. The heap is the JVM's `-Xmx`. */
   def buildSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // default: one shuffle partition per core. SPARK_GRAFT_SHUFFLE
-      // overrides for large-SF probes — at 1000× base a fixed 32 means
-      // ~19 M-row partitions that spill; sizing partitions to the data
-      // (AQE coalesces the small ones back) is the same knob a cluster
-      // run turns, measured in PERF.md's 1000× relational probe
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+        shufflePartitions(sys.env, cpus.toInt).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // shuffled hash join beats sort-merge when neither side needs a sort;
@@ -34,11 +52,13 @@ object Bench {
       // re-dispatches instead of the scan throwing before dispatch
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
+
+  /** [[buildSession]] on SPARK_GRAFT_CPUS cores. */
+  def buildSession(): SparkSession = buildSession(cpus().toString)
 
   /** Ambient load (1m, 5m) from /proc/loadavg; empty on non-Linux or any
     * read failure — best-effort context, never a reason to fail a bench. */
@@ -48,37 +68,6 @@ object Bench {
       try src.mkString.split("\\s+").take(2).toSeq.map(_.toDouble)
       finally src.close()
     } catch { case _: Exception => Seq.empty }
-
-  /** (total, idle+iowait, steal) jiffies from /proc/stat's aggregate cpu
-    * line; (-1,-1,-1) on non-Linux or read failure. */
-  private def procStat(): (Long, Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val v =
-        try src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        finally src.close()
-      (v.sum, v(3) + v(4), v(7))
-    } catch { case _: Exception => (-1L, -1L, -1L) }
-
-  /** Hypervisor steal as a percentage of the NON-IDLE cpu time spanned by
-    * `body` — the cut the hypervisor took of the cycles this guest's busy
-    * cores tried to spend. Direct co-tenancy evidence with a different
-    * blind spot than the spins: steal catches cpu-time confiscation,
-    * the memory walk catches bandwidth/LLC contention that steals nothing.
-    * (r15 diagnosis of the day-long degraded mode: a single busy core
-    * measured ~30-50% steal-of-busy while the host sat at loadavg 0.1,
-    * and spin_mem read 2.0-3.8 s vs ~1.0 quiet.) -1 when /proc/stat is
-    * unavailable or the interval had no busy time. */
-  private[graft] def stealPctBusy[A](body: => A): (A, Double) = {
-    val (t0, i0, s0) = procStat()
-    val a = body
-    val (t1, i1, s1) = procStat()
-    val busy = (t1 - t0) - (i1 - i0)
-    val pct =
-      if (t0 < 0 || t1 < 0 || busy <= 0) -1.0
-      else 100.0 * (s1 - s0) / busy.toDouble
-    (a, pct)
-  }
 
   /** Effective-host-speed indexes, each a fixed single-thread workload
     * timed after one unrecorded JIT-warmup pass. Two probes with disjoint
@@ -112,10 +101,10 @@ object Bench {
     * tracks memory pressure (the array is rebuilt per call; ~1 s quiet).
     * 64 MB (16M Ints) exceeds this host's 54 MiB L3, so the walk misses
     * to DRAM; kept at 64 MB rather than doubled because every accumulated
-    * quiet-window baseline (PERF.md, rounds/, the record gate below) is in
-    * this probe's units — resizing it would orphan them all. On a future
-    * host with L3 ≥ 64 MB the probe would read cache-resident and the
-    * size (and baselines) must be revisited together. */
+    * quiet-window baseline (PERF.md, rounds/) is in this probe's units —
+    * resizing it would orphan them all. On a future host with L3 ≥ 64 MB
+    * the probe would read cache-resident and the size (and baselines)
+    * must be revisited together. */
   private[graft] def cpuSpinMem(): Double = {
     val n = 16000000
     val next = new Array[Int](n)
@@ -132,83 +121,18 @@ object Bench {
     }
   }
 
-  /** Quiet-window thresholds for the two JVM spin probes, env-overridable.
-    * Defaults from the accumulated artifacts: spin_reg reads 0.20–0.30 s
-    * quiet (no degraded window ever moved it much — it tracks frequency
-    * caps, which this host doesn't apply); spin_mem reads ~0.95–1.3 s
-    * quiet and 1.47–2.2 s in every documented degraded window, so the
-    * flag sits in the gap. */
-  private[graft] def spinRegFlag: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SPIN_REG_FLAG", "0.45").toDouble
-  private[graft] def spinMemFlag: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SPIN_MEM_FLAG", "1.35").toDouble
-
-  /** Record-gate (r14 verdict #1): an artifact-of-record cut must not
-    * embed the host's degraded mode (BENCH_r14 66.6 s, BENCH_SF1 71.4 s
-    * and the t36-1000× rows all did, and each cost the round a
-    * host-vs-engine attribution argument the probes could have settled
-    * before the run started). With SPARK_GRAFT_RECORD=1 this waits —
-    * re-probing every SPARK_GRAFT_RECORD_RETRY_SEC (default 60) up to
-    * SPARK_GRAFT_RECORD_TRIES (default 20) times — until both start
-    * probes read quiet; if the host never quiets, it proceeds (a bench
-    * that never runs is worse than a flagged one) and the artifact is
-    * diverted to a `.flagged` path by [[writeArtifact]]. Returns the
-    * final (reg, mem) readings. */
-  private def awaitQuiet(reg0: Double, mem0: Double): (Double, Double) = {
-    if (sys.env.get("SPARK_GRAFT_RECORD").isEmpty) return (reg0, mem0)
-    val retrySec = sys.env.getOrElse("SPARK_GRAFT_RECORD_RETRY_SEC", "60").toInt
-    val tries = sys.env.getOrElse("SPARK_GRAFT_RECORD_TRIES", "20").toInt
-    var (reg, mem) = (reg0, mem0)
-    var i = 0
-    while ((reg > spinRegFlag || mem > spinMemFlag) && i < tries) {
-      System.err.println(f"[bench] record gate: host not quiet (spin_reg $reg%.2f" +
-        f" vs $spinRegFlag, spin_mem $mem%.2f vs $spinMemFlag); retry ${i + 1}/$tries" +
-        f" in $retrySec s")
-      Thread.sleep(retrySec * 1000L)
-      reg = cpuSpinReg(); mem = cpuSpinMem(); i += 1
-    }
-    if (reg > spinRegFlag || mem > spinMemFlag)
-      System.err.println("[bench] record gate: host never quieted; proceeding " +
-        "FLAGGED (artifact will be diverted to a .flagged path)")
-    (reg, mem)
-  }
-
-  /** Write a bench artifact to its path of record — unless the run's own
-    * probes flagged it AND record mode is on, in which case the file goes
-    * to `path.flagged` so the record path only ever holds quiet cuts
-    * (r14 ADVICE: the committed "latest" sf0.1 snapshot was a degraded-
-    * window cut and anything diffing against it read host noise as an
-    * engine regression). Consumers can still check the embedded
-    * probe_quiet field on any artifact. */
-  private[graft] def writeArtifact(json: String, path: String): Unit = {
-    val flaggedRun = json.contains("\"probe_quiet\":false")
-    // A proven-quiet record is protected even OUTSIDE record mode: a casual
-    // (non-record) degraded-window run must not clobber a quiet cut at the
-    // record path — that is exactly how the r14 "latest" snapshot went bad.
-    // A flagged run may still replace a flagged/unproven one (freshness on a
-    // host whose degraded mode lasts whole days beats staleness).
-    val existingQuiet = {
-      val f = new java.io.File(path)
-      f.isFile && {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.contains("\"probe_quiet\":true") finally src.close()
-      }
-    }
-    val target =
-      if (flaggedRun && (sys.env.contains("SPARK_GRAFT_RECORD") || existingQuiet))
-        path + ".flagged"
-      else path
-    val out = new java.io.File(target)
-    Option(out.getParentFile).foreach(_.mkdirs())
-    val w = new java.io.PrintWriter(out, "UTF-8")
-    try w.println(json) finally w.close()
-    System.err.println(s"[bench] full result written to $target" +
-      (if (target != path) " (PROBE-FLAGGED — not a record cut)" else ""))
-  }
+  /** Quiet-window thresholds for the two JVM spin probes, behind the
+    * artifact's `probe_quiet` label. From the accumulated artifacts:
+    * spin_reg reads 0.20–0.30 s quiet (it tracks frequency caps, which no
+    * recorded host applied); spin_mem reads ~0.95–1.3 s quiet and
+    * 1.47–2.2 s in every documented degraded window, so the flag sits in
+    * the gap. */
+  private val SpinRegQuietSec = 0.45
+  private val SpinMemQuietSec = 1.35
 
   /** The two renderings of one bench run: `artifactJson` is the full-
     * precision record (pass_times, noisy flags, loadavg, spin probes —
-    * everything PERF.md analysis needs) written to the rounds/ snapshot;
+    * everything PERF.md analysis needs) written to SPARK_GRAFT_BENCH_OUT;
     * `stdoutLine` is a compact equivalent (3-decimal times, no pass_times)
     * whose whole point is to FIT: the round driver keeps only the last
     * ~2000 characters of stdout and parses the JSON line from that tail,
@@ -234,7 +158,8 @@ object Bench {
     // end capture is self-polluted by our own 32 threads, kept for
     // context only.
     val loadStart = loadavg()
-    val (spinRegStart, spinMemStart) = awaitQuiet(cpuSpinReg(), cpuSpinMem())
+    val spinRegStart = cpuSpinReg()
+    val spinMemStart = cpuSpinMem()
     // loud (non-fatal) schema-drift diagnosis before anything runs
     graft.core.Contract.warn(spark, sfDir)
 
@@ -261,7 +186,7 @@ object Bench {
     names.foreach { n =>
       System.err.println(s"[bench] warmup $n")
       try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // two measured passes, report the per-query minimum: the steady-state
@@ -275,7 +200,7 @@ object Bench {
       System.err.println(s"[bench] measure $name")
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         errors.getOrElseUpdate(name,
           // ALL control chars are illegal in a JSON string — one raw \f in
           // an error message would make the whole output line unparseable
@@ -284,19 +209,7 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // SPARK_GRAFT_PASSES raises the measured-pass count (default 2, the
-    // methodology every round since r1 — keep it for round-over-round
-    // comparability) when a noisy co-tenant window would otherwise
-    // dominate the deltas; the count is RECORDED in the output so an
-    // artifact measured at a different N is never silently compared.
-    val passes = math.max(1, sys.env.get("SPARK_GRAFT_PASSES") match {
-      case None => 2
-      case Some(raw) => scala.util.Try(raw.trim.toInt).getOrElse(
-        // a malformed value must fail LOUDLY and name the knob — a bare
-        // .toInt aborts the whole run with an anonymous NumberFormatException
-        // before any query executes
-        sys.error(s"SPARK_GRAFT_PASSES must be an integer, got '$raw'"))
-    })
+    val passes = Bench.passes(sys.env)
     val allPasses = (1 to passes).map(_ => names.map(n => n -> timeOnce(n)).toMap)
     val results = names
       .map(n => n -> allPasses.map(_(n)).min)
@@ -328,11 +241,11 @@ object Bench {
     // afternoon mode arrived mid-run more than once) — same max(start,
     // end) rule pair_bench.sh applies to its python spin
     val probeQuiet =
-      math.max(spinRegStart, spinRegEnd) <= spinRegFlag &&
-      math.max(spinMemStart, spinMemEnd) <= spinMemFlag
+      math.max(spinRegStart, spinRegEnd) <= SpinRegQuietSec &&
+      math.max(spinMemStart, spinMemEnd) <= SpinMemQuietSec
     def loadJson(l: Seq[Double]) = l.mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"pass_times":$passJson,"noisy":$noisyJson,"errors":$errJson,"skipped":$skipJson,"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"spin_reg_start_sec":$spinRegStart,"spin_reg_end_sec":$spinRegEnd,"spin_mem_start_sec":$spinMemStart,"spin_mem_end_sec":$spinMemEnd,"probe_quiet":$probeQuiet,"probe_flags":{"reg":$spinRegFlag,"mem":$spinMemFlag},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"pass_times":$passJson,"noisy":$noisyJson,"errors":$errJson,"skipped":$skipJson,"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"spin_reg_start_sec":$spinRegStart,"spin_reg_end_sec":$spinRegEnd,"spin_mem_start_sec":$spinMemStart,"spin_mem_end_sec":$spinMemEnd,"probe_quiet":$probeQuiet,"probe_flags":{"reg":$SpinRegQuietSec,"mem":$SpinMemQuietSec},"sf":"$sfDir"}"""
     val compact =
       compactLine(total, passes, results, errors, skipJson, probeQuiet, sfDir)
     BenchOutput(compact, full)
@@ -355,24 +268,19 @@ object Bench {
     s"""{"metric":"total","value":${f3(total)},"unit":"sec","passes":$passes,"queries":$qsC,"errors":$errC,"skipped":$skipJson,"probe_quiet":$probeQuiet,"sf":"$sfDir"}"""
   }
 
+  /** Prints the compact line; the full artifact goes to
+    * SPARK_GRAFT_BENCH_OUT when set (stdout tails get truncated, the file
+    * keeps every per-query pass time). */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
-    val out0 = run(spark, sfDir)
-    println(out0.stdoutLine)
-    // Persist the COMPLETE result to a stable repo path in addition to
-    // stdout: the driver's BENCH_rN.json keeps only stdout's tail, which
-    // truncated the r13 per-query map (round-13 verdict #4). One file per
-    // sf tag, overwritten each run, so the latest full map per scale is
-    // always diffable without reconstructing it from pairing windows.
-    val tag = new java.io.File(sfDir).getName
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"/root/repo/rounds/BENCH_full_latest_$tag.json")
-    try writeArtifact(out0.artifactJson, out)
-    catch { case e: Exception =>
-      // best-effort: a read-only checkout must not fail the bench run
-      System.err.println(s"[bench] WARNING: could not write $out: ${e.getMessage}")
+    val spark = buildSession()
+    val out = run(spark, sfDir)
+    println(out.stdoutLine)
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { path =>
+      val f = new java.io.File(path)
+      Option(f.getParentFile).foreach(_.mkdirs())
+      java.nio.file.Files.writeString(f.toPath, out.artifactJson + "\n")
+      System.err.println(s"[bench] full result written to $path")
     }
     spark.stop()
   }

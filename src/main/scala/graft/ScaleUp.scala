@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *    rename: a gram string's corpus-wide df FRACTION dilutes by
   *    1/factor (its family has the base count, the corpus is factor×
   *    bigger), so corpus-fraction-relative operators (t06's DF cap) are
-  *    measured with the cap scaled by 1/factor — `graft.DensityProbe` —
-  *    which by bijectivity reproduces the base capped-set semantics.
+  *    measured with the cap scaled by 1/factor (PERF.md round 9), which
+  *    by bijectivity reproduces the base capped-set semantics.
   *
   * Usage: ScaleUp [inDir] [outDir] [factor] [mode]
   *
@@ -55,15 +55,7 @@ object ScaleUp {
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "dense"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the NANOS→Long branch of Tables.normalizeEventTs reachable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession()
     run(spark, in, out, factor, mode)
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** The reference's batch-DAG contract (reference: main.py:29-125): an ordered
   * list of named jobs where a failure is reported and the DAG continues —
@@ -35,7 +36,8 @@ object Pipeline {
   final case class Job(name: String, run: SparkSession => Unit)
 
   /** Run jobs in order; failures are isolated per job (the reference's error
-    * model: errors do not halt the DAG). Returns the names of failed jobs. */
+    * model: errors do not halt the DAG). Fatal JVM errors (OOM, linkage)
+    * are not job failures and escape. Returns the names of failed jobs. */
   def run(spark: SparkSession, jobs: Seq[Job],
           notifier: Notifier = LogNotifier): Seq[String] =
     jobs.flatMap { job =>
@@ -44,7 +46,7 @@ object Pipeline {
         notifier.success(job.name)
         None
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           notifier.failure(job.name, e)
           Some(job.name)
       }

@@ -522,15 +522,15 @@ object Graph {
   }
 
   /** Canonical co-occurrence edges: ids sharing a group value become an
-    * edge (a < b, distinct) — the build feeding q56/GraphProbe's
+    * edge (a < b, distinct) — the build feeding q56's
     * co-purchase graph. ONE exchange on the group key, a Tungsten
     * sortWithinPartitions, then a streaming run iterator that emits each
     * group's pairs with ZERO per-group allocation (one reused buffer per
     * partition; sorted runs make pairs canonical and dedup consecutive
     * ids for free) — then the edge distinct.
     *
-    * Why this form (round-14 A/B ladder, all same-window, GraphProbe
-    * `edges_*` forms on the full sf10 graph / sf100d): the round-13
+    * Why this form (round-14 A/B ladder, all same-window, `edges_*`
+    * forms on the full sf10 graph / sf100d; PERF.md round 14): the round-13
     * self-join baseline pays a distinct exchange PLUS a group re-shuffle
     * and two SMJ sorts (warm 9.7–11.7 s sf10); collect_set + the
     * compiled UnorderedPairs kernel takes the one-exchange shape (8.6 —

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Env
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -475,7 +476,7 @@ object NearDup {
     * @return (a_id, b_id) distinct candidate pairs, a_id < b_id */
   def selfMinHashPairs(docs: DataFrame, shingleWords: Int = 3,
                        numHashes: Int = 8, bandSize: Int = 2,
-                       sigCheckpointCap: Long = sigCkptCap): DataFrame = {
+                       sigCheckpointCap: Long = sigCkptCap()): DataFrame = {
     require(numHashes % bandSize == 0, "numHashes must be a multiple of bandSize")
     val nBands = numHashes / bandSize
     graft.functions.TextExpressions.register(docs.sparkSession)
@@ -549,10 +550,10 @@ object NearDup {
 
   /** Doc-count cap under which [[selfMinHashPairs]] eagerly checkpoints
     * its signature frame instead of recomputing the kernel per join side.
-    * Env-overridable (measurement knob, same pattern as the bench's spin
-    * flags); 0 disables the gate entirely (the pre-r16 always-lazy form). */
-  private def sigCkptCap: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SIG_CKPT_CAP", "200000").toLong
+    * SPARK_GRAFT_SIG_CKPT_CAP overrides it (a measurement knob); 0 disables
+    * the gate entirely (the pre-r16 always-lazy form). */
+  private[graft] def sigCkptCap(env: collection.Map[String, String] = sys.env): Long =
+    Env.long(env, "SPARK_GRAFT_SIG_CKPT_CAP", 200000L)
 
   /** Chunk-level (sub-document) dedup — the RefinedWeb/CCNet-style pass
     * that removes repeated passages ACROSS documents while keeping the host

@@ -239,8 +239,8 @@ object Relational {
         rPayload.map(c => col(s"__pick.$c").as(c)): _*)
   }
 
-  /** Stats-driven as-of dispatch, the measured strategy choice (AsofBench
-    * sweep, PERF.md round 7):
+  /** Stats-driven as-of dispatch, the measured strategy choice (round-7
+    * sweep, PERF.md "Why these plans survive 100 TB", as-of join):
     *
     *  - right side under `broadcastThreshold` (estimated from the optimized
     *    plan, default = the session's autoBroadcastJoinThreshold) →

@@ -20,8 +20,8 @@ import Q._
 object RelationalQueries {
 
   /** q25's shape over arbitrary (lineitem, orders) frames — shared with
-    * [[graft.BucketProbe]], which re-times it over bucketed tables; ONE
-    * definition so the probe can never drift from the gated query. */
+    * the bucketed co-location gate row, which re-runs it over bucketed
+    * tables; ONE definition so the two can never drift apart. */
   def q25Shape(li: org.apache.spark.sql.DataFrame,
                os: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     li.join(os, col("l_orderkey") === col("o_orderkey"))
@@ -1381,14 +1381,14 @@ object RelationalQueries {
     // 1.2M edges over 20k parts, mean degree 120 — measured round 13 at
     // engine 6.6–7.9 s vs DuckDB 7.8–8.4 s same-window, a win, but it
     // would still multiply the bench total on both sides; PERF.md
-    // records the head-to-head, graft.GraphProbe re-measures it). ----
+    // round 13 records the head-to-head). ----
     Q("q56_triangle_count",
       (s, dir) => {
         // Edge build: Graph.coOccurrenceEdges — one exchange on o,
         // Tungsten sort, streaming run-pair emission. Chosen over the
         // round-13 self-join form AND the collect_set + compiled-kernel
         // form by the round-14 five-way A/B ladder (same-window
-        // GraphProbe edges_* runs; full measurements pinned in the
+        // edges_* runs, PERF.md round 14; full measurements pinned in the
         // coOccurrenceEdges scaladoc — the kernel form won standalone
         // but its object sort-agg churn lost in-suite, the sorted-run
         // form wins everywhere incl. 31% at sf100d). Same canonical
@@ -1464,8 +1464,8 @@ object RelationalQueries {
 
     // ---- the fact-fact co-location lever as a STANDING gate (round-9
     // verdict ask #3): q25's exact shape re-run over Scale.writeBucketed
-    // tables. BucketProbe proved the lever once at 1000× (join 19.0 s vs
-    // 70.7 s raw, same window); this row re-proves it on EVERY surface,
+    // tables. PERF.md round 9 proved the lever once at 1000× (join 19.0 s
+    // vs 70.7 s raw, same window); this row re-proves it on EVERY surface,
     // every round — the runner asserts AT RUNTIME that the bucket-co-
     // located join subplan is exchange-free (a silent bucketing
     // regression fails the gate loudly, not just a spec), and the hash

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Env
 import graft.functions.VectorExpressions
 import Q._
 
@@ -90,7 +91,7 @@ object VectorQueries {
     * cap bounds one degenerate cluster's replication at 16×. Exact
     * refinement for ANY map — pair set and gate hashes never change. */
   private[graft] def blocksBySize(sizes: Seq[(Long, Long)],
-                                    targetTasks: Int = tileTarget): Map[Long, Int] = {
+                                    targetTasks: Int = tileTarget()): Map[Long, Int] = {
     val sumSq = sizes.map { case (_, n) => n.toDouble * n.toDouble }.sum
     if (sumSq <= 0) Map.empty
     else {
@@ -109,9 +110,8 @@ object VectorQueries {
     * gives the gain back). Round 11's "B=4/128 tiles optimal, B=6 gives
     * back 40–55%" was measured under the STACKED exchange and is
     * superseded — stacking, not tile size, was the regressor. */
-  private def tileTarget: Int =
-    sys.env.get("SPARK_GRAFT_SEMDEDUP_TILES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(256)
+  private[graft] def tileTarget(env: collection.Map[String, String] = sys.env): Int =
+    Env.int(env, "SPARK_GRAFT_SEMDEDUP_TILES", 256, min = 1)
 
   private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))

@@ -3,6 +3,7 @@ package graft.service
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** The reference's HTTP entry points (SURVEY.md §3.2/§3.3) as a thin layer
   * over the engine seams — JDK `HttpServer`, zero added dependencies, no
@@ -239,7 +240,7 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
         // synchronous mini-DAG), so the response carries the outcome
         try respond(ex, 200, s"""{"msg":${jstr(hooks.solarRefresh())}}""")
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             respond(ex, 500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
         }
 
@@ -247,7 +248,7 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
         respond(ex, 404, """{"error":"not found"}""")
     }
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       respond(ex, 500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
   }
 }

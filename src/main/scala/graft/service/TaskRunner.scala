@@ -1,6 +1,7 @@
 package graft.service
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import scala.util.control.NonFatal
 
 /** The async-task backbone behind the reference's HTTP layer — Celery's
   * submit / state-store / poll contract (reference: app/celery.py:7-31,
@@ -53,7 +54,9 @@ final class TaskRunner(threads: Int = 2, maxRecords: Int = 10000) {
 
   /** Submit named work; returns the task id immediately (the `.delay()`
     * contract). `work` returns the task's result string (what the
-    * reference stores in celery_taskmeta.result). */
+    * reference stores in celery_taskmeta.result). A fatal JVM error still
+    * records FAILURE and fires `onError`, then is rethrown on the worker
+    * thread (the pool replaces the thread, so later submits run). */
   def submit(name: String, onError: (String, Throwable) => Unit = (_, _) => ())
             (work: => String): String = {
     val id = java.util.UUID.randomUUID().toString
@@ -68,9 +71,9 @@ final class TaskRunner(threads: Int = 2, maxRecords: Int = 10000) {
         case e: Throwable =>
           metas.put(id, Meta(id, name, "FAILURE", None,
             Some(String.valueOf(e.getMessage)), seq))
-          try onError(id, e) catch { case _: Throwable => () }
-      }
-      evictIfNeeded()
+          try onError(id, e) catch { case NonFatal(_) => () }
+          if (!NonFatal(e)) throw e
+      } finally evictIfNeeded()
     }
     id
   }

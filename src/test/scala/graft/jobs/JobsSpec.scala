@@ -67,6 +67,13 @@ class JobsSpec extends SparkSpec {
     assert(failed == Seq("boom"))
     assert(notifier.events.toList == List(
       ("success", "ok_job"), ("failure", "boom: nope"), ("success", "after_boom")))
+    // a fatal JVM error is not a job failure: it escapes and the DAG stops
+    val fatalNotifier = new Pipeline.CollectingNotifier
+    intercept[LinkageError](Pipeline.run(spark, Seq(
+      Pipeline.Job("linkage", _ => throw new LinkageError("bad class")),
+      Pipeline.Job("after_linkage", _ => ())
+    ), fatalNotifier))
+    assert(fatalNotifier.events.isEmpty)
   }
 
   test("mail routing formats the reference's cron report bodies exactly") {

@@ -159,6 +159,25 @@ class ApiSpec extends SparkSpec {
     } finally { api.stop(); runner.shutdown() }
   }
 
+  test("fatal task work ends in FAILURE with onError fired; later submits still run") {
+    val runner = new TaskRunner(threads = 1)
+    val failed = new java.util.concurrent.atomic.AtomicReference[String]()
+    val mailed = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val id = runner.submit("fatal",
+          onError = (tid, _) => { failed.set(tid); mailed.countDown() }) {
+        throw new LinkageError("bad class")
+      }
+      assert(runner.await(id) == "FAILURE")
+      assert(runner.meta(id).flatMap(_.error).contains("bad class"))
+      assert(mailed.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      assert(failed.get == id)
+      val next = runner.submit("after") { "ok" }
+      assert(runner.await(next) == "SUCCESS")
+      assert(runner.meta(next).flatMap(_.result).contains("ok"))
+    } finally runner.shutdown()
+  }
+
   test("a failing chain polls as FAILURE and mails the developer list") {
     val box = new Mail.CollectingTransport
     val router = Mail.Router("test", Seq("ops@example.com"),
